@@ -165,7 +165,7 @@ object Bench {
     * at sf0.01 against a committed sf0.1 record would mark everything
     * slow or fast for scale reasons, not regression reasons). */
   private def committedMedians(
-      sfJson: String, cpus: String): Map[String, Double] =
+      sfJson: String, cpus: Int): Map[String, Double] =
     try {
       val p = Paths.get("BENCH_FULL.json")
       if (!Files.exists(p)) Map.empty
@@ -181,8 +181,7 @@ object Bench {
         // would have rebaselined 20+ of them downward) — a sweep at a
         // different width gets no committed denominators at all
         val cpuNode = root.get("cpus")
-        if (cpuNode == null ||
-            cpuNode.asText() != cpus.replace("\"", ""))
+        if (cpuNode == null || cpuNode.asText() != cpus.toString)
           return Map.empty
         val qs = root.get("queries")
         if (qs == null) Map.empty
@@ -283,12 +282,12 @@ object Bench {
       runs: Int,
       spikes: Int,
       slowVsCommitted: Int,
-      cpus: String,
+      cpus: Int,
       rawRuns: Option[Map[String, Seq[RunStat]]] = None,
       vsCommitted: Option[Map[String, Double]] = None,
       probes: Option[Seq[(String, Probe)]] = None,
-      probedCount: Int = 0,
-      stealTotalMs: Long = -1L): String = {
+      probedCount: Int,
+      stealTotalMs: Long): String = {
     val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
       .mkString("{", ",", "}")
     val omit = if (omitted > 0) s""","omitted":$omitted""" else ""
@@ -420,13 +419,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val rawCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // JSON-safe rendering for the artifact's "cpus" field (a local[*]
-    // style value must be quoted, a thread count stays a number)
-    val cpus =
-      if (rawCpus.nonEmpty && rawCpus.forall(_.isDigit)) rawCpus
-      else "\"" + rawCpus + "\""
+    val sfDir = GraftSession.sfDir
+    val cpus = GraftSession.cpus
     // dev-only subset filter (comma-separated names); the driver never
     // sets it, so the recorded bench always covers the full registry
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -477,19 +471,7 @@ object Bench {
           s"[bench] SPARK_GRAFT_BENCH_ONLY ignoring unknown query " +
             s"names: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$rawCpus]")
-      .config("spark.sql.shuffle.partitions", rawCpus)
-      .config("spark.ui.enabled", "false")
-      // the ContextCleaner is WEAK-REF driven: on a 128 GiB heap a
-      // whole bench session can finish without one full GC (gc_ms ≈ 0
-      // in every r9 raw run), so broadcast/shuffle/checkpoint cleanup
-      // never fires and a long session accumulates. Periodic GC (down
-      // from the 30 min default) bounds that accumulation; per-run
-      // `rdds` makes any residue visible in the artifact.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // one-time warm-up: file listing, parquet footers, first codegen,
     // plus the session-lifetime index/cache builds that are setup cost,
     // not query cost — the minhash shingle persist and the IVF k-means
@@ -567,9 +549,6 @@ object Bench {
         (if (runs >= 2) ts.drop(1) else ts).map(_.t).filter(_ >= 0)
       med > 0 && warmTs.nonEmpty && warmTs.max > 3 * med
     }
-    // total = successful medians only; failures are visible as the -1
-    // per-query entries rather than skewing the total downward
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // "sf":0.1 as a number when the dir is .../sfX.Y (saves ~25 chars
     // of window budget); the quoted dir otherwise
     val sfJson = "sf([0-9.]+)$".r.findFirstMatchIn(sfDir) match {
@@ -722,6 +701,8 @@ object Bench {
           committed(n)
         else m)
     }
+    // total = successful medians only; failures are visible as the -1
+    // per-query entries rather than skewing the total downward
     val totalOut =
       resultsOut.collect { case (_, v) if v >= 0 => v }.sum
     // full precision for humans + judge: a repo file only. Round 3
@@ -772,7 +753,7 @@ object Bench {
               s"${committedSf.get}: writing BENCH_DEV.json " +
               "(BENCH_FULL.json preserved)")
           "BENCH_DEV.json"
-        } else if (committedCpus.exists(_ != cpus.replace("\"", ""))) {
+        } else if (committedCpus.exists(_ != cpus.toString)) {
           // same r11 cross-sf lesson, width edition (r13): a local[4]
           // dev sweep must never overwrite the driver's local[32]
           // medians - the fluke-FAST adoptions it would write are the

@@ -13,8 +13,8 @@ import graft.functions.{DotProduct, SortedIntersectCount}
   *
   * Wire up either way:
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)  // or
-  *   --conf spark.sql.extensions=graft.GraftExtensions           // or
+  *   builder.withExtensions(new GraftExtensions)        // or
+  *   --conf spark.sql.extensions=graft.GraftExtensions  // or
   *   GraftExtensions.register(spark)   // on a live session
   * }}}
   */

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketches, Union, UpdateSketch}
+import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketches, Union}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult

@@ -631,7 +631,7 @@ object DedupQueries {
       |SELECT k, ROUND(sim, 2) AS jaccard,
       |  ROUND(s4, 6) AS p_one_band,
       |  ROUND(1 - q4 * q4, 6) AS p_candidate
-      |FROM f ORDER BY k""".stripMargin) { (s, d) =>
+      |FROM f ORDER BY k""".stripMargin) { (s, _) =>
     val sim = col("k") / 20.0
     val s4 = ((sim * sim) * sim) * sim
     s.range(1, 20).toDF("k")
@@ -758,7 +758,7 @@ object DedupQueries {
   /** Cluster report from (nodes, edges); `forceDistributed` pins the
     * large-graph path for the spec's path-equivalence check. */
   private[graft] def erClustersFrom(
-      s: SparkSession, nodes: DataFrame, edges: DataFrame,
+      nodes: DataFrame, edges: DataFrame,
       forceDistributed: Boolean = false): DataFrame = {
     // budget gate + driver union-find live in ConnectedComponents
     // .runAuto — this site used to carry a drifted inline copy whose
@@ -814,7 +814,7 @@ object DedupQueries {
       |GROUP BY l.root
       |ORDER BY cluster_id""".stripMargin) { (s, d) =>
     val (nodes, edges) = erGraph(s, d)
-    erClustersFrom(s, nodes, edges)
+    erClustersFrom(nodes, edges)
   }
 
   /** Canonical-URL dedup with a keep-best policy (the first stage of

@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.types._
 
 import graft.QDef

@@ -244,7 +244,7 @@ object ScalarFuncQueries {
       |  (isodow(d) >= 6) AS is_weekend
       |FROM (SELECT unnest(generate_series(TIMESTAMP '1995-01-01',
       |        TIMESTAMP '1995-12-31', INTERVAL 1 DAY)) AS d)
-      |ORDER BY day""".stripMargin) { (s, d) =>
+      |ORDER BY day""".stripMargin) { (s, _) =>
     s.range(1)
       .select(explode(sequence(
         lit("1995-01-01 00:00:00").cast("timestamp_ntz"),

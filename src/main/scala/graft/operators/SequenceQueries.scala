@@ -38,7 +38,7 @@ object SequenceQueries {
       ("error_then_buy", "e.*p"),
       ("browse_only", "^[cv]+$"),
       ("repeat_error", "e.*e"))
-    val armsSql = patterns.map { case (n, re) =>
+    val armsSql = patterns.map { case (n, _) =>
       s"SELECT '$n' AS pattern, $n AS n_user_days, total FROM m"
     }.mkString("\n  UNION ALL\n  ")
     val condSql = patterns.map { case (n, re) =>

@@ -76,17 +76,7 @@ object JdbcConnector {
     props.foldLeft(w) { case (r, (k, v)) => r.option(k, v) }.save()
   }
 
-  /** One-call migration of a table list — the reference's whole program
-    * (enumerate → per-table export → bulk load) as a library function.
-    * Source here is any DataFrame provider (the Access-mapped read or a
-    * staging lake); target is JDBC. */
-  def migrate(
-      tables: Seq[(String, DataFrame)],
-      url: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    tables.foreach { case (name, df) => write(df, url, name, mode) }
-
-  /** Key-based upsert — the INCREMENTAL load the one-shot `migrate`
+  /** Key-based upsert — the INCREMENTAL load a one-shot overwrite
     * lacks (re-running a full overwrite per delta is the anti-pattern
     * at warehouse scale).
     *

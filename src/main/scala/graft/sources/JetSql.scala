@@ -912,7 +912,7 @@ object JetSql {
   private def render(t: Tok): String = t.kind match {
     case "string" => "'" + t.text.replace("'", "''") + "'"
     case "date" => dateLiteral(t.text)
-    case other => t.text
+    case _ => t.text
   }
 
   /** Split `toks` (the inside of a call) at depth-0 commas. */
@@ -1576,7 +1576,7 @@ object JetSql {
         val ls = primaryStart(cur, pe)
         var rs = nextNonWs(ci + 1)
         if (rs >= cur.length) fail("^ with a missing right operand")
-        var rStart = rs
+        val rStart = rs
         if (cur(rs).kind == "punct" &&
           (cur(rs).text == "-" || cur(rs).text == "+")) {
           rs = nextNonWs(rs + 1)

@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.JetTypes
 import graft.sources.JetTypes._
 
 /** Write side of the jetcsv source (the `mdb-export`-format SINK): a

@@ -2,7 +2,6 @@ package graft.sources.jetmdb
 
 import java.nio.charset.StandardCharsets
 
-import graft.sources.JetTypes
 import graft.sources.JetTypes._
 
 /** Minimal Jet4 (`.mdb`, Access 2000+) page-format parser — the
@@ -103,7 +102,7 @@ object JetMdbFormat {
       indexes: Seq[JetIndex] = Nil) {
     def jetTypes: Seq[(String, JetType)] =
       columns.map(c => c.name ->
-        JetMdbFormat.toJetType(c.typeCode, c.length, c.prec, c.scale))
+        JetMdbFormat.toJetType(c.typeCode, c.prec, c.scale))
   }
 
   final case class CatalogEntry(name: String, tdefPage: Int, objType: Int) {
@@ -143,7 +142,7 @@ object JetMdbFormat {
   val T_BIGINT = 0x13
   val T_DATEXT = 0x14
 
-  def toJetType(code: Int, len: Int, prec: Int = 0, scale: Int = 0)
+  def toJetType(code: Int, prec: Int = 0, scale: Int = 0)
       : JetType = code match {
     case T_BOOL => YesNo
     case T_BYTE => JetByte

@@ -274,7 +274,7 @@ object JetMdbSource {
       val payloadIdx = payload.map(pc =>
         flatT.columns.indexWhere(_.name == pc.name)).toArray
       val payloadT = payload.map(pc =>
-        toJetType(pc.typeCode, pc.length, pc.prec, pc.scale)).toArray
+        toJetType(pc.typeCode, pc.prec, pc.scale)).toArray
       // single-"Value" payload = simple multi-valued field → the
       // schema side renders array<scalar> (JetTypes r14), so the
       // index stores bare values, not one-field rows
@@ -367,7 +367,7 @@ object JetMdbSource {
           val fp = scala.collection.mutable.LinkedHashMap[String, Int]()
           val resolved = tdef.columns.map { c =>
             if (c.typeCode != T_COMPLEX)
-              c.name -> toJetType(c.typeCode, c.length, c.prec, c.scale)
+              c.name -> toJetType(c.typeCode, c.prec, c.scale)
             else {
               val flat = links.getOrElse((tdef.tdefPage, c.colNum),
                 throw new UnsupportedOperationException(
@@ -383,7 +383,7 @@ object JetMdbSource {
               fp(c.name) = flat
               c.name -> JetTypes.ComplexValues(
                 complexPayloadCols(flatT).map(pc =>
-                  pc.name -> toJetType(pc.typeCode, pc.length,
+                  pc.name -> toJetType(pc.typeCode,
                     pc.prec, pc.scale)))
             }
           }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Bpe, BpeDecode, BpeVocab, TokenizeBpe}
+import graft.functions.{Bpe, BpeDecode, TokenizeBpe}
 
 /** Byte-level BPE: golden merges on the classic hand-checkable corpus,
   * trainer-vs-naive-reference equivalence on random corpora (the

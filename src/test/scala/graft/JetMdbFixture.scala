@@ -338,7 +338,7 @@ object JetMdbFixture {
       if (isVar(c)) { if (v != null) setBit(i); mi += 1 }
     }
     // tail: [var table asc][u16 var count][null mask]
-    var tail = total - bitmaskSz
+    val tail = total - bitmaskSz
     System.arraycopy(mask, 0, r, tail, bitmaskSz)
     if (hasVarTable) {
       b.putShort(tail - 2, varCols.toShort)

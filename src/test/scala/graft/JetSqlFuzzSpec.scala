@@ -158,7 +158,7 @@ class JetSqlFuzzSpec extends AnyFunSuite {
       "ab c'\"[]%_"(r.nextInt(10))).mkString
     // (declared type, binding, SQL cast for stable collection,
     //  expected collected string)
-    def one(i: Int): (String, Any, String, String) = r.nextInt(6) match {
+    def one(): (String, Any, String, String) = r.nextInt(6) match {
       case 0 =>
         val v = r.nextLong(1000000) - 500000
         ("Long", v, "", v.toString)
@@ -186,7 +186,7 @@ class JetSqlFuzzSpec extends AnyFunSuite {
         ("Bit", v, "", v.toString)
     }
     (0 until 200).grouped(25).foreach { batch =>
-      val cases = batch.map(i => (i, one(i)))
+      val cases = batch.map(i => (i, one()))
       val jet = "PARAMETERS " + cases.map { case (i, (tpe, _, _, _)) =>
         s"[P $i] $tpe" }.mkString(", ") + "; SELECT " +
         cases.map { case (i, _) => s"CStr([P $i]) AS c$i" }.mkString(", ")

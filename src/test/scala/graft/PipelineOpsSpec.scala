@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.PipelineOpsQueries
 
 /** Round-9 pipeline operators: semantics beyond the driver hash gate
   * — bloom-independence of the prefiltered semi-join, the split's

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -476,7 +475,7 @@ class PlanSpec extends AnyFunSuite {
     // 100-row rank windows / 20-row output), never directly over a scan
     val badSorts = p.collectWithSubqueries {
       case s: SortExec if s.collectLeaves().exists {
-        case f: FileSourceScanExec => true
+        case _: FileSourceScanExec => true
         case _ => false
       } && !s.exists(_.isInstanceOf[TakeOrderedAndProjectExec]) => s
     }

@@ -62,7 +62,6 @@ class RoundSixSpec extends AnyFunSuite {
     val rows = run("q_interpolate_linear")
       .map(r => (r.getDate(0).toString, r.getInt(1), r.getDouble(2)))
     assert(rows.nonEmpty)
-    val vals = rows.map(_._3)
     rows.sliding(3).foreach {
       case Array((_, 1, f), _, _) => assert(f > 0)
       case _ =>
@@ -159,7 +158,7 @@ class RoundSixSpec extends AnyFunSuite {
     val d = 0.75
     val byW1 = cb.groupBy(_._1._1)
     c1.keys.foreach { w1 =>
-      val seen = byW1(w1).map { case ((_, w2), c12) =>
+      val seen = byW1(w1).map { case ((_, _), c12) =>
         math.max(c12 - d, 0.0) / c1(w1)
       }.sum
       val cont = vocab.map(w2 =>
@@ -211,7 +210,7 @@ class RoundSixSpec extends AnyFunSuite {
     }
     val expected = names.groupBy(x => find(x._4))
       .filter(_._2.length >= 2) // run() omits isolated vertices
-      .map { case (root, xs) =>
+      .map { case (_, xs) =>
         // cluster label = min node id in the component (CC contract)
         (xs.map(_._4).min, xs.length.toLong, xs.map(_._5).sum)
       }.toSeq.sortBy(_._1)
@@ -224,7 +223,7 @@ class RoundSixSpec extends AnyFunSuite {
     val (nodesDf, edgesDf) =
       graft.operators.DedupQueries.erGraph(spark, sfDir)
     val distributed = graft.operators.DedupQueries
-      .erClustersFrom(spark, nodesDf, edgesDf, forceDistributed = true)
+      .erClustersFrom(nodesDf, edgesDf, forceDistributed = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(distributed.toSeq == out.toSeq,
       "distributed CC path diverges from the union-find path")

@@ -27,7 +27,8 @@ class ScaleLayoutSpec extends AnyFunSuite {
     TableLoader.configure(spark)
     Seq("li_bucketed", "o_bucketed").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"/tmp/graft_warehouse/$t")
+      val loc = new java.io.File(new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t).toUri.getPath)
       if (loc.exists()) {
         import scala.reflect.io.Directory
         new Directory(loc).deleteRecursively()

@@ -132,7 +132,7 @@ class SelectionSpec extends AnyFunSuite {
         Array.tabulate(64)(t => if (t == 0) 2.5f else 0.0f).toSeq, 0)) ++
       (0 until 30).map(i => (100L + i,
         Array.tabulate(64)(t => if (t == i) 1.0f else 0.0f).toSeq, 1)) ++
-      Seq((200L, Array.tabulate(64)(t => 1.0f).toSeq, 2),
+      Seq((200L, Array.fill(64)(1.0f).toSeq, 2),
         (201L, Array.fill(64)(0.0f).toSeq, 2))
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1)

@@ -17,8 +17,8 @@ mismatch cannot ship invisibly again:
      conservative superset of the driver's compare: if renderings differ
      at all, we fail here even if the driver might pass.
 
-Usage: python3 tools/parity_check.py <sfDir> <verifyOutDir>
-Exit code = number of failing queries.
+Usage: python3 tools/parity_check.py <sfDir> <verifyOutDir> [query ...]
+Checks every oracle query, or only the named ones. Exits 1 if any fails.
 """
 import sys, os, json, glob, hashlib, datetime
 import duckdb
@@ -57,12 +57,19 @@ def canon(df):
 
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    sf_dir, out_dir, only = sys.argv[1], sys.argv[2], sys.argv[3:]
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
-    con = duckdb.connect()
-    load_tables(con, sf_dir)
     failures, results = [], {}
+    if only:
+        for name in only:
+            if name not in oracle:
+                failures.append(name)
+                results[name] = {"err": "no_oracle_sql"}
+        oracle = {k: v for k, v in oracle.items() if k in only}
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    load_tables(con, sf_dir)
     for name in sorted(oracle):
         spark_dir = os.path.join(out_dir, name)
         if not os.path.isdir(spark_dir):
@@ -108,14 +115,13 @@ def main():
                     break
             failures.append(name)
         results[name] = rec
-    n_oracle = len(oracle)
     print(json.dumps(results, indent=1))
     print(
-        f"\nPARITY: {n_oracle - len(failures)}/{n_oracle} pass"
+        f"\nPARITY: {len(results) - len(failures)}/{len(results)} pass"
         + (f"; FAIL: {', '.join(failures)}" if failures else ""),
         file=sys.stderr,
     )
-    sys.exit(len(failures))
+    sys.exit(1 if failures else 0)
 
 
 if __name__ == "__main__":

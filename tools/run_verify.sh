@@ -13,6 +13,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 java $ADD_OPENS -Xmx8g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   graft.Verify "$SF" "$OUT"
 python3 tools/parity_check.py "$SF" "$OUT"
