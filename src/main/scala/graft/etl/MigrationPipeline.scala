@@ -186,39 +186,55 @@ object MigrationPipeline {
 
   /** Run the full migration; returns per-table row counts.
     * `sinkProps` passes driver/credential options to a JDBC sink.
-    * After ALL tables load into a JDBC sink, the constraints stage
-    * applies [[constraintDdl]] (PKs/indexes from each spec,
-    * `relationships` as FKs) — after, because bulk load into a
-    * constrained table pays per-row checking and FK targets may load
-    * later than their children. Parquet sinks carry no constraints;
-    * the DDL is still available via [[constraintDdl]] for the
-    * warehouse that will mount them. */
+    *
+    * Schedule (the `pg_restore --jobs` shape): every table runs its
+    * own pipeline — normalize → write → verify the TARGET's count →
+    * that table's key DDL (NOT NULL alters, PK, secondary indexes,
+    * identity: `constraintDdl(Seq(spec), Nil, dialect)`) — all tables
+    * concurrently on a fixed pool of `min(tables, defaultParallelism)`
+    * threads created and shut down inside this call. Only after EVERY
+    * pipeline has finished do the foreign keys (`relationships`) go
+    * on, serially and in [[constraintDdl]] order on one connection:
+    * an FK needs both its tables loaded and its target's key in place,
+    * and bulk load into a constrained table would pay per-row
+    * checking. Parquet sinks carry no constraints; the DDL is still
+    * available via [[constraintDdl]] for the warehouse that will mount
+    * them.
+    *
+    * Failure: every table is joined before this returns (no Spark job
+    * of the migration outlives the call). If any table failed, the
+    * ORIGINAL exception of the first failing table in `tables` order
+    * is rethrown and no FK statement runs; the other tables' loads and
+    * key DDL may have completed on the target. */
   def migrate(
       spark: SparkSession,
       tables: Seq[TableSpec],
       sink: Sink,
       sinkProps: Map[String, String] = Map.empty,
       relationships: Seq[JetRelationshipRow] = Nil): Map[String, Long] = {
-    val counts = tables.map { spec =>
+    val dialect = sink match {
+      case JdbcSink(url) if url.startsWith("jdbc:derby") => "derby"
+      case _ => "postgres"
+    }
+    def executable(ddl: Seq[String]): Seq[String] =
+      ddl.filterNot(_.startsWith("--")) // comments document, not execute
+    val counts = concurrently(spark, tables) { spec =>
       val df =
         if (spec.typed) normalizeTyped(spec.source(spark))
         else normalize(spark, spec)
-      val n = sink match {
+      val table = JetTypes.sanitizeName(spec.name)
+      sink match {
         case ParquetSink(dir) =>
-          df.write.mode(SaveMode.Overwrite)
-            .parquet(s"$dir/${JetTypes.sanitizeName(spec.name)}.parquet")
-          spark.read
-            .parquet(s"$dir/${JetTypes.sanitizeName(spec.name)}.parquet")
-            .count()
+          df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$table.parquet")
+          spark.read.parquet(s"$dir/$table.parquet").count()
         case JdbcSink(url) =>
-          val table = JetTypes.sanitizeName(spec.name)
           // Access ShortText is BOUNDED (≤255): create it as
           // VARCHAR(255), not the writer's default unbounded type —
           // Derby's CLOB can't even compare against string literals,
           // so a ported WHERE clause would fail on the migrated
           // column. Memo/LongText keeps the unbounded default.
           val shortTexts = spec.jetSchema.collect {
-            case (n, graft.sources.JetTypes.ShortText) =>
+            case (n, JetTypes.ShortText) =>
               s"${JetTypes.sanitizeName(n)} VARCHAR(255)"
           }
           val typeProps =
@@ -229,20 +245,46 @@ object MigrationPipeline {
             df, url, table, SaveMode.Overwrite, props = typeProps)
           // verify the TARGET (like the parquet branch) — counting the
           // source would mask a write that dropped rows
-          JdbcConnector.read(spark, url, table, props = sinkProps).count()
+          val n = JdbcConnector.count(url, table, sinkProps)
+          JdbcConnector.execute(url,
+            executable(constraintDdl(Seq(spec), Nil, dialect)), sinkProps)
+          n
       }
-      spec.name -> n
-    }.toMap
+    }
     sink match {
       case JdbcSink(url) =>
-        val dialect =
-          if (url.startsWith("jdbc:derby")) "derby" else "postgres"
-        val ddl = constraintDdl(tables, relationships, dialect)
-          .filterNot(_.startsWith("--")) // comments document, not execute
-        JdbcConnector.execute(url, ddl, sinkProps)
+        JdbcConnector.execute(url,
+          executable(constraintDdl(Nil, relationships, dialect)), sinkProps)
       case _: ParquetSink => () // no constraint surface on files
     }
-    counts
+    tables.map(_.name).zip(counts).toMap
+  }
+
+  /** `f` over every spec on a fixed pool of `min(specs,
+    * defaultParallelism)` threads, `spark` active on each. Joins every
+    * spec, then rethrows the first failure in spec order as itself
+    * (not wrapped in an `ExecutionException`). */
+  private def concurrently[A](spark: SparkSession, specs: Seq[TableSpec])(
+      f: TableSpec => A): Seq[A] = {
+    if (specs.isEmpty) return Nil
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(specs.size, spark.sparkContext.defaultParallelism))
+    try {
+      val futures = specs.map { spec =>
+        pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = { SparkSession.setActiveSession(spark); f(spec) }
+        })
+      }
+      val outcomes = futures.map { fu =>
+        try Right(fu.get())
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            Left(e.getCause)
+        }
+      }
+      outcomes.collectFirst { case Left(e) => throw e }
+      outcomes.collect { case Right(a) => a }
+    } finally pool.shutdown()
   }
 
   /** Run translated Jet ACTION queries — the saved UPDATE / DELETE /
@@ -278,7 +320,8 @@ object MigrationPipeline {
         catch {
           case e: java.sql.SQLException =>
             throw new java.sql.SQLException(
-              s"action query [$name] failed: $sql — ${e.getMessage}", e)
+              s"action query [$name] failed: $sql — ${e.getMessage}",
+              e.getSQLState, e.getErrorCode, e)
         }
       } finally st.close()
     } finally conn.close()

@@ -90,10 +90,8 @@ object JetCrypt {
   }
 
   /** Open `path` for page reads: a plain stream when `dbKey` is 0, a
-    * decrypting wrapper otherwise. The wrapper only serves the
-    * page-aligned `readFully(pos, buf)` shape `JetMdbSource.readPage`
-    * uses — anything else fails loudly rather than returning bytes
-    * of ambiguous cleartext state. */
+    * decrypting wrapper otherwise (see `Rc4PageStream` for the read
+    * shape it serves). */
   def open(h: FileSystem, path: String, dbKey: Int,
       pageSize: Int): FSDataInputStream = {
     val under = h.open(new Path(path))
@@ -105,40 +103,43 @@ object JetCrypt {
 
 /** Page-aligned decrypting view over an open database stream: page 0
   * passes through (the header is never page-encrypted), every other
-  * page is RC4'd with `dbKey XOR pageNumber`. */
+  * page is RC4'd with `dbKey XOR pageNumber`. Serves the `seek` +
+  * sequential whole-page read `JetMdbSource.readPage` issues; any
+  * other read shape fails loudly rather than returning bytes of
+  * ambiguous cleartext state. */
 private[jetmdb] final class Rc4PageStream(
     under: FSDataInputStream, dbKey: Int, pageSize: Int)
   extends java.io.InputStream with Seekable with PositionedReadable {
 
-  override def readFully(position: Long, buffer: Array[Byte],
-      offset: Int, length: Int): Unit = {
-    require(position % pageSize == 0 && length == pageSize &&
-      offset == 0,
-      s"jetmdb: encrypted read must be page-aligned (pos=$position " +
+  private var pos = 0L
+
+  override def seek(p: Long): Unit = { under.seek(p); pos = p }
+  override def getPos: Long = pos
+
+  override def read(buffer: Array[Byte], offset: Int,
+      length: Int): Int = {
+    require(pos % pageSize == 0 && length == pageSize,
+      s"jetmdb: encrypted read must be page-aligned (pos=$pos " +
         s"len=$length pageSize=$pageSize)")
-    under.readFully(position, buffer, offset, length)
-    val page = (position / pageSize).toInt
+    under.readFully(buffer, offset, length)
+    val page = (pos / pageSize).toInt
     if (page != 0)
       JetCrypt.rc4(JetCrypt.pageKey(dbKey, page), buffer, offset, length)
-  }
-
-  override def readFully(position: Long,
-      buffer: Array[Byte]): Unit =
-    readFully(position, buffer, 0, buffer.length)
-
-  override def read(position: Long, buffer: Array[Byte], offset: Int,
-      length: Int): Int = {
-    readFully(position, buffer, offset, length)
+    pos += length
     length
   }
 
-  // sequential-stream surface: unused by the page reader; loud
-  override def read(): Int = throw new UnsupportedOperationException(
-    "jetmdb: encrypted stream serves positioned page reads only")
-  override def seek(pos: Long): Unit =
-    throw new UnsupportedOperationException(
-      "jetmdb: encrypted stream serves positioned page reads only")
-  override def getPos: Long = under.getPos
+  // positioned and single-byte reads: unused by the page reader; loud
+  private def unsupported =
+    new UnsupportedOperationException(
+      "jetmdb: encrypted stream serves seek + whole-page reads only")
+  override def read(): Int = throw unsupported
+  override def read(position: Long, buffer: Array[Byte], offset: Int,
+      length: Int): Int = throw unsupported
+  override def readFully(position: Long, buffer: Array[Byte],
+      offset: Int, length: Int): Unit = throw unsupported
+  override def readFully(position: Long, buffer: Array[Byte]): Unit =
+    throw unsupported
   override def seekToNewSource(targetPos: Long): Boolean = false
   override def close(): Unit = under.close()
 }

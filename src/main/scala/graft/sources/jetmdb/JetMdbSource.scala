@@ -37,7 +37,8 @@ import graft.sources.jetmdb.JetMdbFormat._
   * unit of parallelism is FILES (thousands of them, one task each via
   * a parallelized file list + union or a streaming ingest), with
   * page-range splits only smoothing skew within unusually large
-  * files. The per-file catalog read costs two pages.
+  * files. The per-file catalog read walks every page once on the
+  * driver (memoized per file version, see `catalogCache`).
   */
 class JetMdbSource extends TableProvider with DataSourceRegister {
 
@@ -76,13 +77,21 @@ object JetMdbSource {
       SparkSession.active.sparkContext.hadoopConfiguration)
 
   /** Read page `n` of `path` through the Hadoop FS (works for local
-    * and distributed stores alike). `pageSize` defaults to Jet4's
-    * 4096; Jet3 files read 2048-byte pages. */
+    * and distributed stores alike) — the ONE way any page is fetched.
+    * `pageSize` defaults to Jet4's 4096; Jet3 files read 2048-byte
+    * pages.
+    *
+    * `seek` + sequential `readFully` on the already-open stream, never
+    * the positioned `readFully(pos, buf)`: on a checksummed local FS
+    * the positioned form opens a fresh data + `.crc` checker per call,
+    * which made a whole-file walk tens of times slower. Checksums are
+    * still verified — the open stream's own checker does it. */
   def readPage(
       f: org.apache.hadoop.fs.FSDataInputStream, n: Int,
       pageSize: Int = PageSize): Array[Byte] = {
     val page = new Array[Byte](pageSize)
-    f.readFully(n.toLong * pageSize, page)
+    f.seek(n.toLong * pageSize)
+    f.readFully(page)
     page
   }
 

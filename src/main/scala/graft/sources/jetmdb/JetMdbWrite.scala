@@ -740,17 +740,11 @@ private[jetmdb] final case class JetMdbBatchWrite(
             s"jetmdb/jet3 append: $path is not 2048-page-aligned " +
               s"(${st.getLen} bytes)")
           val oldCount = (st.getLen / Jet3Format.PageSize).toInt
-          val pages = new Array[Array[Byte]](oldCount)
           val in = fs.open(new Path(path))
-          try {
-            var n = 0
-            while (n < oldCount) {
-              val pg = new Array[Byte](Jet3Format.PageSize)
-              in.readFully(n.toLong * Jet3Format.PageSize, pg)
-              pages(n) = pg
-              n += 1
-            }
-          } finally in.close()
+          val pages =
+            try Array.tabulate(oldCount)(
+              JetMdbSource.readPage(in, _, Jet3Format.PageSize))
+            finally in.close()
           Jet3Write.appendPages3(pages, table, schema, codes, rows,
             blobs, writePage)
         } else Jet3Write.freshPages3(table, schema, codes, rows, blobs,
@@ -793,17 +787,10 @@ private[jetmdb] final case class JetMdbBatchWrite(
     require(st.getLen % PageSize == 0,
       s"jetmdb append: $path is not page-aligned (${st.getLen} bytes)")
     val oldCount = (st.getLen / PageSize).toInt
-    val pages = new Array[Array[Byte]](oldCount)
     val in = fs.open(new Path(path))
-    try {
-      var n = 0
-      while (n < oldCount) {
-        val pg = new Array[Byte](PageSize)
-        in.readFully(n.toLong * PageSize, pg)
-        pages(n) = pg
-        n += 1
-      }
-    } finally in.close()
+    val pages =
+      try Array.tabulate(oldCount)(JetMdbSource.readPage(in, _, PageSize))
+      finally in.close()
     checkHeader(pages(0))
     // the requested version must MATCH the file on disk: appending
     // Jet4-declared tables into an .accdb (or vice versa) would leave

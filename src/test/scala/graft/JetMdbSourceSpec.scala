@@ -618,4 +618,29 @@ class JetMdbSourceSpec extends AnyFunSuite {
     assert(spark.read.format("jetmdb").option("table", "t").load(p3)
       .collect()(0).getLong(nCols - 1) == 1234567890123L)
   }
+
+  test("page reads keep Hadoop checksum verification: a flipped data " +
+    "byte under an unchanged .crc fails the read with ChecksumException") {
+    val path = tmpMdb()
+    (1 to 500).map(i => (i, s"row $i")).toDF("id", "label")
+      .write.format("jetmdb").option("table", "t").mode("overwrite")
+      .save(path)
+    val crc = java.nio.file.Paths.get(path).resolveSibling(".test.mdb.crc")
+    assert(Files.exists(crc), "the writer leaves a checksum sidecar")
+    // flip one byte of a data page, never the header; the .crc stays
+    val raf = new java.io.RandomAccessFile(path, "rw")
+    try {
+      val off = raf.length() - 100
+      raf.seek(off)
+      val b = raf.read()
+      raf.seek(off)
+      raf.write(b ^ 0xFF)
+    } finally raf.close()
+    val e = intercept[Throwable] {
+      spark.read.format("jetmdb").option("table", "t").load(path).collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]),
+      e.toString)
+  }
 }

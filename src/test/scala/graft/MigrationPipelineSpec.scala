@@ -2,11 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.MigrationPipeline
-import graft.etl.MigrationPipeline.{ParquetSink, TableSpec}
+import graft.etl.MigrationPipeline.{JdbcSink, ParquetSink, TableSpec}
+import graft.sources.JdbcConnector
 import graft.sources.JetTypes._
+import graft.sources.jetmdb.JetMdbFormat.JetIndex
+import graft.sources.jetmdb.JetMdbSource.JetRelationshipRow
 
 /** End-to-end migration pipeline: enumerate → schema DDL → normalize →
   * bulk load → verify counts (SURVEY.md §3.1 rendered in Spark). */
@@ -196,6 +201,8 @@ class MigrationPipelineSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("Bad One") &&
       e.getMessage.contains("DELETE FROM no_such_table"))
+    // the target's SQLState survives the wrapping (42 = syntax/access)
+    assert(e.getSQLState.startsWith("42"), e.getSQLState)
   }
 
   test("UPDATE … INNER JOIN action query mutates the Derby target " +
@@ -375,5 +382,114 @@ class MigrationPipelineSpec extends AnyFunSuite {
         assert(dup.getSQLState.startsWith("23"), dup.getMessage)
       } finally st.close()
     } finally conn.close()
+  }
+
+  private val derbyProps =
+    Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+
+  private def freshDerby(prefix: String): String =
+    s"jdbc:derby:${Files.createTempDirectory(prefix).resolve("db")};" +
+      "create=true"
+
+  private def pk(col: String) =
+    Seq(JetIndex("PrimaryKey", Seq(col), unique = true, primary = true))
+
+  /** region ← store ← sale, every FK ON DELETE CASCADE; sale spans
+    * four partitions. */
+  private def chain(storeSource: SparkSession => DataFrame)
+      : (Seq[TableSpec], Seq[JetRelationshipRow]) = {
+    val specs = Seq(
+      TableSpec("Region",
+        s => s.range(1, 6).select(col("id").cast("string").as("Rid")),
+        Seq("Rid" -> LongInteger), pk("Rid")),
+      TableSpec("Store", storeSource,
+        Seq("Sid" -> LongInteger, "Rid" -> LongInteger), pk("Sid")),
+      TableSpec("Sale",
+        s => s.range(0, 2000, 1, 4).select(
+          col("id").cast("string").as("Cid"),
+          (col("id") % 50 + 1).cast("string").as("Sid")),
+        Seq("Cid" -> LongInteger, "Sid" -> LongInteger), pk("Cid")))
+    val rels = Seq(
+      JetRelationshipRow("StoreRegion", "Store", "Rid", "Region", "Rid",
+        0, 1, 0x1000),
+      JetRelationshipRow("SaleStore", "Sale", "Sid", "Store", "Sid",
+        0, 1, 0x1000))
+    (specs, rels)
+  }
+
+  private val stores: SparkSession => DataFrame = s =>
+    s.range(1, 51).select(col("id").cast("string").as("Sid"),
+      (col("id") % 5 + 1).cast("string").as("Rid"))
+
+  private def noActiveJobs(): Unit = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+  }
+
+  private def scalar(url: String, sql: String): Int = {
+    val conn = JdbcConnector.connect(url, derbyProps)
+    try {
+      val rs = conn.createStatement().executeQuery(sql)
+      rs.next()
+      rs.getInt(1)
+    } finally conn.close()
+  }
+
+  test("concurrent schedule: a three-table FK chain loads with every " +
+    "PK and FK enforced and ON DELETE CASCADE working") {
+    val url = freshDerby("graft_derby_chain")
+    val (specs, rels) = chain(stores)
+    val counts = MigrationPipeline.migrate(
+      spark, specs, JdbcSink(url), derbyProps, rels)
+    noActiveJobs()
+    assert(counts == Map("Region" -> 5L, "Store" -> 50L, "Sale" -> 2000L))
+    assert(scalar(url, "SELECT COUNT(*) FROM SYS.SYSCONSTRAINTS " +
+      "WHERE TYPE = 'F'") == 2)
+    val conn = JdbcConnector.connect(url, derbyProps)
+    try {
+      val st = conn.createStatement()
+      val dup = intercept[java.sql.SQLException] {
+        st.execute("INSERT INTO sale VALUES (0, 1)")
+      }
+      assert(dup.getSQLState.startsWith("23"), dup.getMessage)
+      val orphan = intercept[java.sql.SQLException] {
+        st.execute("INSERT INTO store VALUES (99, 42)")
+      }
+      assert(orphan.getSQLState.startsWith("23"), orphan.getMessage)
+      // region 1 owns stores 5, 10, …, 50 (10 stores), which own 400
+      // sales: the cascade runs through both FKs
+      st.execute("DELETE FROM region WHERE \"rid\" = 1")
+    } finally conn.close()
+    assert(scalar(url, "SELECT COUNT(*) FROM store") == 40)
+    assert(scalar(url, "SELECT COUNT(*) FROM sale") == 1600)
+  }
+
+  test("concurrent schedule: a failing table's own exception is " +
+    "rethrown after every table is joined, and no FK goes on") {
+    val url = freshDerby("graft_derby_chain_fail")
+    val boom = new IllegalStateException("store source unavailable")
+    val (specs, rels) = chain(_ => throw boom)
+    val e = intercept[IllegalStateException] {
+      MigrationPipeline.migrate(spark, specs, JdbcSink(url), derbyProps, rels)
+    }
+    assert(e eq boom)
+    noActiveJobs()
+    assert(scalar(url, "SELECT COUNT(*) FROM SYS.SYSCONSTRAINTS " +
+      "WHERE TYPE = 'F'") == 0)
+  }
+
+  test("a failing key statement keeps the target's SQLState and names " +
+    "the statement") {
+    val url = freshDerby("graft_derby_dup_pk")
+    val dupes = TableSpec("Dupes",
+      _ => Seq(("1", "a"), ("1", "b")).toDF("Id", "Label"),
+      Seq("Id" -> LongInteger, "Label" -> ShortText), pk("Id"))
+    val e = intercept[java.sql.SQLException] {
+      MigrationPipeline.migrate(spark, Seq(dupes), JdbcSink(url), derbyProps)
+    }
+    assert(e.getSQLState.startsWith("23"), e.getSQLState)
+    assert(e.getMessage.contains(
+      "ALTER TABLE dupes ADD CONSTRAINT dupes_pkey PRIMARY KEY"),
+      e.getMessage)
   }
 }
